@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered gate query against
@@ -13,15 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Engine.local(cpus)
     // JVM/codegen warmup: run EVERY query once at the smallest sf before
     // timing — the first execution of each query shape pays whole-stage
     // codegen compilation + classloading (measured 3.4s vs 0.5s
@@ -52,12 +47,16 @@ object Bench {
     val startNs = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - startNs) / 1e9
     try SparkEntry.entry(spark).count()
-    catch { case _: Throwable => }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] entry check failed: ${e.getMessage}")
+    }
     // warmup times double as the pass-1 COST ESTIMATES (round 19):
     // they're sf0.001 numbers, useless as absolute sf0.1 predictions,
     // but their ORDERING is what pass scheduling needs — see
     // orderCheapestFirst below.
     val warmEst = scala.collection.mutable.Map.empty[String, Double]
+    var warmFailed = 0
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -66,7 +65,11 @@ object Bench {
             val w0 = System.nanoTime()
             fn(spark, warmDir).write.mode("overwrite").format("noop").save()
             warmEst(name) = (System.nanoTime() - w0) / 1e9
-          } catch { case _: Throwable => }
+          } catch {
+            case NonFatal(e) =>
+              warmFailed += 1
+              System.err.println(s"[bench] $name warmup failed: ${e.getMessage}")
+          }
       }
     spark.catalog.clearCache()
     // CONTENTION PROBES (round 20): the same fixed CPU-bound probe is
@@ -93,7 +96,7 @@ object Bench {
       }
       probeTimes += cur
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] contention probe failed: $e")
     }
     // INTERLEAVED passes + adaptive reps: the host shows heavy
@@ -139,23 +142,17 @@ object Bench {
     // Verify): a context-killing query must not silently void the rest
     // of the suite with near-zero "timings" of instant failures
     var active = spark
-    def session(): org.apache.spark.sql.SparkSession = {
-      if (active.sparkContext.isStopped) {
-        active = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        active.sparkContext.setLogLevel("WARN")
-      }
+    def session(): SparkSession = {
+      if (active.sparkContext.isStopped) active = Engine.local(cpus)
       active
     }
     def probe(): Unit =
       if (elapsedSec < deadlineSec)
         try probeTimes += contentionProbeSec(session())
-        catch { case _: Throwable => }
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] contention probe failed: $e")
+        }
     def median(ts: Seq[Double]): Double = {
       val s = ts.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -197,6 +194,8 @@ object Bench {
             timesByName(name) = timesByName(name) :+ (System.nanoTime() - t0) / 1e9
             if (graft.queries.StageCache.serveCount > served0) stageServed += name
           } catch {
+            // Throwable, not NonFatal: a driver OOM in one query must not
+            // lose the scoreboard line; session() replaces a killed context
             case e: Throwable =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
@@ -295,7 +294,7 @@ object Bench {
       System.err.println(s"[bench] deadline ${deadlineSec}s hit -- " +
         s"${deadlineSkipped.size} queries degraded: " +
         deadlineSkipped.toSeq.sorted.mkString(","))
-    System.err.println(detailLine(results, reps, sfDir))
+    System.err.println(detailLine(results, reps, sfDir, warmFailed))
     val line = renderLine(meds.map { case (k, v) => shortKey(k) -> v },
       total, reps, sfNum, deadlineSkipped.size,
       plannedReps = plannedReps,
@@ -405,10 +404,12 @@ object Bench {
     * on medians while min-over-runs landed within ~1.1×, so
     * cross-round "regression vs drift" calls read min first),
     * `spread` (max−min), and `n` (successful rep count). -1 marks an
-    * all-reps failure.
+    * all-reps failure. `warm_failed` counts queries whose warmup threw
+    * (each also printed by name); their pass-1 order falls back to
+    * "unknown cost, last".
     */
   def detailLine(results: Seq[(String, Vector[Double])], reps: Int,
-                 sfDir: String): String = {
+                 sfDir: String, warmFailed: Int = 0): String = {
     def median(ts: Seq[Double]): Double = {
       val s = ts.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -423,7 +424,7 @@ object Bench {
     val repCounts = results.map { case (k, ts) => "\"" + k + "\":" + ts.size }
       .mkString("{", ",", "}")
     s"""[bench-detail] {"queries":$longQs,"min":$mins,"spread":$spread,""" +
-      s""""n":$repCounts,"reps":$reps,"sf":"$sfDir"}"""
+      s""""n":$repCounts,"reps":$reps,"sf":"$sfDir","warm_failed":$warmFailed}"""
   }
 
   /** The stdout budget: the harness that collects this output keeps only

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end example of the ingest surface (SURVEY.md §7.3's
   * minimum slice): messy delimited files → preview → column selection with
   * declared types → atomic save → read back and aggregate. Doubles as the
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.local(4)
 
     // guard failures flip this and the process exits non-zero — an
     // exit-code-checking driver must see a broken guard, not a 0

@@ -1,21 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep INT96 timestamps (default): pandas reads them tz-NAIVE like
-      // DuckDB's — TIMESTAMP_MICROS would come back tz-aware and diverge
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // keep INT96 timestamps (the default; Engine does not change it):
+    // pandas reads them tz-NAIVE like DuckDB's — TIMESTAMP_MICROS would
+    // come back tz-aware and diverge
+    val spark = Engine.local(cpus)
     new java.io.File(outDir).mkdirs()
     // Deterministic order; name-sorted. A query that kills the JVM's
     // SparkContext (OOM) must not void the rest: recreate the session.
@@ -26,16 +20,7 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
-        if (active.sparkContext.isStopped) {
-          // full config again — a bare builder would have no master/UTC
-          active = SparkSession.builder()
-            .master(s"local[$cpus]")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-          active.sparkContext.setLogLevel("WARN")
-        }
+        if (active.sparkContext.isStopped) active = Engine.local(cpus)
         fn(active, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // gate boundary: drop operator-owned caches (banded keys,

@@ -2885,55 +2885,63 @@ object Extensions {
     * in the curation chain.
     */
   def qP9CcnetTrained(s: SparkSession, d: String): DataFrame = {
-    val docs = documents(s, d)
-    val lang = expr(
-      "CASE doc_id % 3 WHEN 0 THEN 'aa' WHEN 1 THEN 'bb' ELSE 'cc' END")
-    def vocab(words: Seq[String]): Column =
-      concat_ws(" ", (0 until 8).map(i =>
-        element_at(
-          array(words.map(lit): _*),
-          ((col("doc_id") * 7 + i * 3) % words.size + 1).cast("int"))): _*)
-    val text = when(col("doc_id") % 3 === 0,
-      vocab(Seq("alpha", "arbor", "anchor", "amber", "apex", "argon")))
-      .when(col("doc_id") % 3 === 1,
-        vocab(Seq("birch", "basalt", "beacon", "bramble", "bisque", "borax")))
-      .otherwise(
-        vocab(Seq("cedar", "cobalt", "cairn", "crimson", "cumin", "cypress")))
-    val corpus = docs.select(col("doc_id"), lang.as("lang"), text.as("text"))
+    // built per session: a frame plans under the conf of the session
+    // it was built on, and the LM thread's must be its own (below)
+    def corpusOn(ss: SparkSession): DataFrame = {
+      val lang = expr(
+        "CASE doc_id % 3 WHEN 0 THEN 'aa' WHEN 1 THEN 'bb' ELSE 'cc' END")
+      def vocab(words: Seq[String]): Column =
+        concat_ws(" ", (0 until 8).map(i =>
+          element_at(
+            array(words.map(lit): _*),
+            ((col("doc_id") * 7 + i * 3) % words.size + 1).cast("int"))): _*)
+      val text = when(col("doc_id") % 3 === 0,
+        vocab(Seq("alpha", "arbor", "anchor", "amber", "apex", "argon")))
+        .when(col("doc_id") % 3 === 1,
+          vocab(Seq("birch", "basalt", "beacon", "bramble", "bisque", "borax")))
+        .otherwise(
+          vocab(Seq("cedar", "cobalt", "cairn", "crimson", "cumin", "cypress")))
+      documents(ss, d).select(col("doc_id"), lang.as("lang"), text.as("text"))
+    }
     // 2% training slice: the disjoint vocabularies separate at ANY
     // sample size (the spec's 4-iter/100% proof runs on dozens of
     // docs), and GD training is the gate's dominant cost — a bigger
     // slice buys bench seconds, not signal (round-18 suite diet)
-    val trainSlice = corpus.filter(col("doc_id") % 50 === 0)
+    def trainSliceOf(corpus: DataFrame): DataFrame =
+      corpus.filter(col("doc_id") % 50 === 0)
+    val corpus = corpusOn(s)
     val wh = GateTemp.fresh("q163_ccnet_wh")
     // the two model builds + publishes are independent Spark jobs
     // writing DIFFERENT snapshot tables — overlap them (guide §2.6):
     // the LM aggregation + publish runs on its own driver thread
     // STARTED BEFORE GD training (round 21; it had started after), so
     // its cluster-side count aggregations backfill the executors GD's
-    // driver-bound iteration collects leave idle. Outputs are
-    // byte-identical to the sequential form (distinct tables, no
-    // shared state beyond the thread-safe snapshot machinery; the LM
-    // thread's plans may compile while trainLangId's tiny-frame static
-    // planning toggles session AQE — AQE changes plan shape, never
-    // results).
+    // driver-bound iteration collects leave idle. The LM thread plans
+    // on an isolated child session, so trainLangId's static-planning
+    // AQE toggle on `s` never reaches its plans.
+    val lmSession = graft.Engine.isolated(s)
     val saveErrs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     def saveThread(f: => Unit): Thread =
       new Thread(() => try f catch { case t: Throwable => saveErrs.add(t) })
     val tSave2 = saveThread {
-      graft.operators.Corpus.saveLmNModel(s, wh, "reflm",
+      graft.operators.Corpus.saveLmNModel(lmSession, wh, "reflm",
         graft.operators.Corpus.ngramBackoffModel(
-          trainSlice, "text", "doc_id", n = 3)); ()
+          trainSliceOf(corpusOn(lmSession)), "text", "doc_id", n = 3)); ()
     }
     tSave2.start()
-    // join in finally: a training/publish failure on THIS thread must
-    // not leave the LM thread writing into a warehouse the next bench
-    // rep's GateTemp.fresh is about to wipe
-    try {
-      val langIdModel = graft.operators.Corpus.trainLangId(
-        trainSlice, "text", "lang", "doc_id", iters = 4)
-      graft.operators.Corpus.saveLangIdModel(s, wh, "langid", langIdModel)
-    } finally tSave2.join()
+    // join before rethrowing: a training/publish failure on THIS thread
+    // must not leave the LM thread writing into a warehouse the next
+    // bench rep's GateTemp.fresh is about to wipe, and its errors ride
+    // along as suppressed
+    val failure =
+      try {
+        val langIdModel = graft.operators.Corpus.trainLangId(
+          trainSliceOf(corpus), "text", "lang", "doc_id", iters = 4)
+        graft.operators.Corpus.saveLangIdModel(s, wh, "langid", langIdModel)
+        None
+      } catch { case t: Throwable => Some(t) }
+    tSave2.join()
+    failure.foreach { t => saveErrs.forEach(t.addSuppressed(_)); throw t }
     if (!saveErrs.isEmpty) throw saveErrs.peek()
     // held-out slice kept at 30% (doc_id%10 in 1..3): the gate pins the
     // SEAM (loaded models driving the CCNet path), which a third of the

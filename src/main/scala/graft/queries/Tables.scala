@@ -34,31 +34,22 @@ object Tables {
     import org.apache.spark.sql.types._
     // A nanos-annotated file fails schema inference at read() time; only
     // then re-read under the legacy conf. The retry runs on a DEDICATED
-    // newSession() (same SparkContext, isolated SQL conf): a transient
-    // set/unset on `s` would race any concurrent analysis in the same
-    // session — another events() retry could observe the unset window
-    // and fail, or an unrelated nanos parquet could silently infer
-    // LongType. The conf only matters while read() bakes the schema
-    // into the LogicalRelation, so the returned frame composes freely
-    // with `s`-session frames afterwards and nothing ever mutates `s`.
+    // child session (Engine.isolated: same SparkContext, isolated SQL
+    // conf, time zone carried over): a transient set/unset on `s`
+    // would race any concurrent analysis in the same session — another
+    // events() retry could observe the unset window and fail, or an
+    // unrelated nanos parquet could silently infer LongType. The conf
+    // only matters while read() bakes the schema into the
+    // LogicalRelation, so the returned frame composes freely with
+    // `s`-session frames afterwards and nothing ever mutates `s`.
     val raw =
       try t(s, d, "events")
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition != null &&
               e.getCondition.startsWith("PARQUET_TYPE_ILLEGAL") =>
-          val iso = s.newSession()
-          // runtime-set confs don't propagate to a new session — carry
-          // the two that change query semantics/shape, exactly like
-          // Streams.readEvents: without the tz copy, actions driven
-          // from the returned frame would resolve dates in the JVM
-          // default zone instead of the caller's
-          iso.conf.set("spark.sql.session.timeZone",
-            s.conf.get("spark.sql.session.timeZone"))
-          iso.conf.set("spark.sql.shuffle.partitions",
-            s.conf.get("spark.sql.shuffle.partitions"))
-          iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          t(iso, d, "events")
+          t(graft.Engine.isolated(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true"),
+            d, "events")
       }
     val ts = raw.schema("ts").dataType match {
       // integer div: a double `/` would round (epoch-nanos exceed a

@@ -66,23 +66,16 @@ object Streams {
     // micro-batch re-converts the parquet schema under it), but a
     // session-global set would silently turn any CONCURRENT batch read
     // of a nanos-annotated parquet in the same session into LongType.
-    // So nanos streams run on a DEDICATED newSession(): same
-    // SparkContext, isolated SQL conf. The returned frame (and
-    // anything started off it — memory sinks register in ITS catalog)
-    // belongs to that session; EventsLayoutSpec pins both the
-    // isolation and the end-to-end conversion.
-    val sess = if (physicalTs == LongType) {
-      val iso = spark.newSession()
-      // runtime-set confs don't propagate to a new session (only
-      // builder-time SparkConf entries do) — carry the two that change
-      // query semantics/shape
-      iso.conf.set("spark.sql.session.timeZone",
-        spark.conf.get("spark.sql.session.timeZone"))
-      iso.conf.set("spark.sql.shuffle.partitions",
-        spark.conf.get("spark.sql.shuffle.partitions"))
-      iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      iso
-    } else spark
+    // So nanos streams run on a DEDICATED child session
+    // (Engine.isolated: same SparkContext, isolated SQL conf). The
+    // returned frame (and anything started off it — memory sinks
+    // register in ITS catalog) belongs to that session;
+    // EventsLayoutSpec pins both the isolation and the end-to-end
+    // conversion.
+    val sess =
+      if (physicalTs == LongType)
+        graft.Engine.isolated(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      else spark
     val raw = sess.readStream.schema(streamSchema).parquet(path)
     val ts = physicalTs match {
       case LongType         => timestamp_micros(expr("ts div 1000"))

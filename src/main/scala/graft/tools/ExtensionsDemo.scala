@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end proof of the SparkSessionExtensions injection path: builds
   * a FRESH session with GraftExtensions (possible here because each sbt
   * runMain forks a new JVM — getOrCreate can't attach to an older
@@ -10,12 +8,9 @@ import org.apache.spark.sql.SparkSession
   */
 object ExtensionsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-demo")
+    val spark = graft.Engine.builder("graft-extensions-demo",
+        Some("local[2]"), Some(2))
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

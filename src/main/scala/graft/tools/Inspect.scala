@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan/profiling utility: `runMain graft.tools.Inspect <sfDir> <what>`.
   *
@@ -15,25 +15,8 @@ object Inspect {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val what = args.lift(1).getOrElse("explain:q01_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // measurement-only override: test shuffle-partition sensitivity
-    // without touching the Bench/Verify contract sessions
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.adaptive.enabled", "true")
-      // measured round 20: canChangeCachedPlanOutputPartitioning=true
-      // (AQE inside cached plans) coalesces KB-scale cached frames to 1
-      // partition and SERIALIZES the CPU-bound consumers (q139's pair
-      // search went 8.1 -> 16.6 s); keep the default (off), knob stays
-      // for re-measurement
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = graft.Engine.local(cpus)
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -189,6 +172,8 @@ object Inspect {
         // per query, execute (collect) and report parquet-scan /
         // reused-exchange counts plus every AQEShuffleRead line with
         // the stage task-width pattern — the coalesced-hot-stage sweep.
+        // A fatal JVM error aborts the sweep rather than mislabelling
+        // the queries after it as independently failed.
         names.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
           spark.sharedState.cacheManager.clearCache()
           try {
@@ -201,10 +186,12 @@ object Inspect {
             val nCoal = "AQEShuffleRead coalesced".r.findAllIn(finalPlan).length
             println(s"[inspect] $q: scans=$nScan reused=$nReuse " +
               s"aqeCoalesced=$nCoal")
+            finalPlan.linesIterator.filter(_.contains("AQEShuffleRead"))
+              .foreach(l => println("[inspect]   " + l.trim.take(160)))
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(s"/tmp/graft_plan_$q.txt"), finalPlan)
           } catch {
-            case e: Throwable => println(s"[inspect] $q FAILED: ${e.getMessage}")
+            case NonFatal(e) => println(s"[inspect] $q FAILED: ${e.getMessage}")
           }
         }
       case Array("scans", q) =>

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -34,14 +34,7 @@ object StreamBench {
       .exists(args.headOption.contains)) { scoredBenches(args); return }
     val rate = args.headOption.map(_.toInt).getOrElse(200000)
     val secs = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.local(32)
     import spark.implicits._
 
     val warehouse =
@@ -102,14 +95,7 @@ object StreamBench {
   private def lmBench(args: Array[String]): Unit = {
     val docsPath = args.lift(1).getOrElse("/tmp/sf1_documents.parquet")
     val perTrigger = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stream-lm-bench")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.local(32)
     val docs = spark.read.parquet(docsPath)
     val model = graft.operators.Corpus.ngramLmModel(docs, "text", "doc_id")
     // stage the stream as many small files so the run has real
@@ -172,14 +158,7 @@ object StreamBench {
     val mode = args(0)
     val docsPath = args.lift(1).getOrElse("/tmp/sf1_documents.parquet")
     val perTrigger = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName(s"graft-stream-$mode-bench")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.local(32)
     val docs = spark.read.parquet(docsPath)
     val stageDir =
       java.nio.file.Files.createTempDirectory(s"graft_${mode}_stream").toString

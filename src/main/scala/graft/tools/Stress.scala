@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Corpus, Dedup, Paths, Similarity, TimeSeries}
@@ -760,13 +760,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val docsPath = args.headOption.getOrElse("/tmp/sf1_documents.parquet")
     val embPath = args.lift(1).getOrElse("/tmp/sf1_embeddings.parquet")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.local(32)
     val docs = spark.read.parquet(docsPath).repartition(32)
     val embs = spark.read.parquet(embPath).repartition(32)
 

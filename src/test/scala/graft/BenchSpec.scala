@@ -82,6 +82,15 @@ class BenchSpec extends AnyFunSuite {
     assert(!line.contains("\n"))
   }
 
+  test("stderr detail line counts failed warmups; a clean warmup reads 0") {
+    val results = Seq(("q1_alpha", Vector(1.0)))
+    val clean = Bench.detailLine(results, 3, "sf0.1")
+    assert(clean.endsWith(",\"warm_failed\":0}"), clean)
+    val failed = Bench.detailLine(results, 3, "sf0.1", warmFailed = 2)
+    assert(failed.endsWith(",\"warm_failed\":2}"), failed)
+    assert(!failed.contains("\n"))
+  }
+
   test("deadline_hit renders as a fixed-size field at every fold level") {
     val small = Seq(("q1", 1.234), ("q2", 0.056))
     val sLine = Bench.renderLine(small, 1.29, 3, 0.1, deadlineHit = 2)

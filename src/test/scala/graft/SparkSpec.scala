@@ -9,18 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * to churn).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // fixed path, not createTempDirectory: every suite CLASS evaluates
-    // this builder config even though getOrCreate shares one session,
-    // so a per-call temp dir leaked ~36 (mostly empty) dirs per test
-    // run into /tmp; a fixed path accumulates nothing
-    .config("spark.sql.warehouse.dir", SparkSpec.warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // Engine.builder, not Engine.local: the SQL functions stay
+  // unregistered, so SqlSurfaceSpec's Engine.attach test means something
+  lazy val spark: SparkSession =
+    Engine.builder("graft-test", Some("local[4]"), Some(4))
+      // fixed path, not createTempDirectory: every suite CLASS evaluates
+      // this builder config even though getOrCreate shares one session,
+      // so a per-call temp dir leaked ~36 (mostly empty) dirs per test
+      // run into /tmp; a fixed path accumulates nothing
+      .config("spark.sql.warehouse.dir", SparkSpec.warehouse)
+      .getOrCreate()
 
   def sf(path: String = "sf0.001"): String = s"/root/testdata/$path"
 

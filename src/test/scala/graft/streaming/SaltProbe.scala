@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch probe for the curatesem bench construction: how strong a
@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object SaltProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]").appName("salt")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Engine.local(16)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet("/tmp/sf1_documents.parquet")
       .filter(col("doc_id") % 25 === 0) // ~2k docs

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe for the chained-semantic-stage spec construction:
@@ -9,11 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object SemChainProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("sem-probe")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
