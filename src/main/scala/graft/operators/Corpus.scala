@@ -2436,7 +2436,10 @@ object Corpus {
     * elimination — CollapseProject would re-run the whole chain once
     * per consumer (the [[gramIndex]] re-evaluation trap). The page
     * rules stay declarative builtins (cheap `contains` probes on the
-    * raw text; CSE dedups them).
+    * raw text; CSE dedups them in a projection only — under a
+    * pushed-down `filter(kept)` each conjunct evaluates on its own, and
+    * the kernel's per-thread last-input memo is what keeps the line
+    * pass to one run per page).
     */
   def c4Clean(
       df: DataFrame, textCol: String, idCol: String,

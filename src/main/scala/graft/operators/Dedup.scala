@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -735,20 +736,25 @@ object Dedup {
     // until the RDD is GC'd — over many rounds (and repeated calls in
     // one session) stale label frames accumulate and evict useful
     // blocks, so each round explicitly unpersists the previous round's
-    // blocks once the new frame is materialized. Tracked by diffing
-    // persistent-RDD ids around the checkpoint call (the only public
-    // handle: Dataset.localCheckpoint doesn't expose its backing RDD).
+    // blocks once the new frame is materialized. Tracked by the
+    // checkpoint's own backing RDD, the LogicalRDD leaf the returned
+    // frame is planned over. Diffing persistent-RDD ids around the call
+    // is NOT equivalent: the first job over `pairs` also builds any lazy
+    // cache inside its lineage (Caches.owned candidates in
+    // nearDupSurvivors), and unpersisting that would drop blocks its
+    // owner still serves — every later read re-runs its lineage.
     def cpTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
       val out = if (reliable) df.checkpoint() else df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.diff(before).toSet)
+      (out, out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet)
     }
     def unpersist(ids: Set[Int]): Unit =
       ids.foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    val (edges, _) = cpTracked(pairs.select(col("id_a"), col("id_b"))
+    // reused every round; lineage cut at the source. No returned frame
+    // reads it (the driver finish collects it; labels are checkpoints
+    // of their own), so every return path unpersists its blocks
+    val (edges, edgeIds) = cpTracked(pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"))))
-      // reused every round; lineage cut at the source
 
     // bounded-size probe on the checkpointed frame (one cheap job):
     // limit(n+1).count() never scans past the budget, so a huge edge
@@ -768,7 +774,11 @@ object Dedup {
       // compare against the PROBED bound: with driverFinishEdges above
       // the collectable range the truncated count could undercount and
       // wave through an edge set the driver cannot hold
-      if (nEdges <= probeCap) return driverUnionFind(pairs, edges)
+      if (nEdges <= probeCap) {
+        val out = driverUnionFind(pairs, edges)
+        unpersist(edgeIds)
+        return out
+      }
     }
     var (labels, labelIds) = cpTracked(edges.select(col("id_a").as("id")).distinct()
       .withColumn("label", col("id")))
@@ -857,6 +867,7 @@ object Dedup {
             .select(col("id"),
               coalesce(col("_graft_root"), col("label")).as("label"))
           unpersist(labelIds)
+          unpersist(edgeIds)
           return composed
         }
         unpersist(cIds)
@@ -866,6 +877,7 @@ object Dedup {
       labelIds = nextIds
       it += 1
     }
+    unpersist(edgeIds)
     labels
   }
 

@@ -45,6 +45,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Same single-pass-expression rationale as [[GopherStats]]/[[C4Stats]]:
   * the nine gram sizes share one word scan, and composed builtins
   * would re-split the text once per consumer under CollapseProject.
+  * As there, field accesses share one evaluation only inside a
+  * projection; under a pushed-down filter each of the 13 threshold
+  * conjuncts evaluates on its own, and the per-thread last-input memo
+  * on `eval` ([[LastInputMemo]]) keeps that to one pass per page.
   */
 object GopherRepStatsExpr {
 
@@ -91,7 +95,14 @@ object GopherRepStatsExpr {
     (items.length.toLong, dupEl, dupCh)
   }
 
-  private[plans] def eval(s: UTF8String): InternalRow = {
+  /** The kernel, memoized per thread on its last input (see
+    * [[LastInputMemo]]); generated code calls this.
+    */
+  private[plans] def eval(s: UTF8String): InternalRow = memo(s)
+
+  private val memo = new LastInputMemo(compute)
+
+  private def compute(s: UTF8String): InternalRow = {
     val str = s.toString
     val n = str.length
 

@@ -29,7 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Same single-pass-expression rationale as [[C4Stats]]: the counts
   * share the word/line scans, and composed builtins would re-run
-  * `split` once per consumer under CollapseProject.
+  * `split` once per consumer under CollapseProject. Field accesses
+  * share one evaluation only inside a projection; a pushed-down filter
+  * evaluates each threshold conjunct on its own, and the per-thread
+  * last-input memo on `eval` ([[LastInputMemo]]) is what keeps that to
+  * one pass per page (the [[C4Stats]] scaladoc has the measurement).
   */
 object GopherStatsExpr {
 
@@ -55,7 +59,14 @@ object GopherStatsExpr {
   private def isWordChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '\''
 
-  private[plans] def eval(s: UTF8String): InternalRow = {
+  /** The kernel, memoized per thread on its last input (see
+    * [[LastInputMemo]]); generated code calls this.
+    */
+  private[plans] def eval(s: UTF8String): InternalRow = memo(s)
+
+  private val memo = new LastInputMemo(compute)
+
+  private def compute(s: UTF8String): InternalRow = {
     val str = s.toString
     var nWords = 0L
     var sumLen = 0L

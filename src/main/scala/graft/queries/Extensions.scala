@@ -2094,7 +2094,7 @@ object Extensions {
     // so thread timing cannot reorder anything.
     val perSeg = math.max(1, math.ceil(pages.length / 16.0).toInt)
     val segs = pages.grouped(perSeg).zipWithIndex.toIndexedSeq
-    java.util.stream.IntStream.range(0, segs.size).parallel().forEach { si =>
+    writeSegments(segs.size) { si =>
       val (seg, i) = segs(si)
       graft.ingest.WetFixture.writeWet(
         f"$dir/segment-$i%05d.warc.wet.gz",
@@ -2112,6 +2112,33 @@ object Extensions {
           .as("source"),
         col("text"))
     curationSummaryFrom(parsed)
+  }
+
+  /** Runs `write(0)`..`write(n - 1)` concurrently on a dedicated pool of
+    * min(16, cores) threads, never the JVM commonPool (which parallel
+    * streams and collections across the process share), and waits for
+    * all of them. Rethrows the lowest-numbered segment's failure, with
+    * any others attached as suppressed; the pool is shut down on every
+    * path. The q150/q157 fixture writer.
+    */
+  private def writeSegments(n: Int)(write: Int => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(16, Runtime.getRuntime.availableProcessors()))
+    try {
+      val pending = (0 until n).map(i => pool.submit(new Runnable {
+        def run(): Unit = write(i)
+      }))
+      var failure: Throwable = null
+      pending.foreach { f =>
+        try f.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            if (failure == null) failure = e.getCause
+            else failure.addSuppressed(e.getCause)
+        }
+      }
+      if (failure != null) throw failure
+    } finally pool.shutdownNow()
   }
 
   /** Raw-crawl ingestion end-to-end — the step BEFORE q150's WET stage
@@ -2143,7 +2170,7 @@ object Extensions {
     // per id so the q133-verbatim oracle hash cannot move.
     val perSeg = math.max(1, math.ceil(pages.length / 16.0).toInt)
     val segs = pages.grouped(perSeg).zipWithIndex.toIndexedSeq
-    java.util.stream.IntStream.range(0, segs.size).parallel().forEach { si =>
+    writeSegments(segs.size) { si =>
       val (seg, i) = segs(si)
       graft.ingest.WetFixture.writeWarc(
         f"$dir/segment-$i%05d.warc.gz",

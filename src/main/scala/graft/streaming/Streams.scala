@@ -268,6 +268,11 @@ object Streams {
     * ProcessingTimeTimeout arms a wall-clock timer per batch;
     * EventTimeTimeout arms a timestamp at lastTs + gap (requires a
     * watermark on `events` upstream — Spark enforces this at analysis).
+    * Under EventTimeTimeout, Spark drops input rows stamped AT OR BEFORE
+    * the current watermark as late before they reach the state — and
+    * that includes the initial watermark, 0 (the epoch): a row stamped
+    * 1970-01-01T00:00:00Z or earlier never opens a session, even in the
+    * first batch (StreamsSpec pins this).
     * flatMapGroupsWithState = the arbitrary-state path the built-in
     * session_window can't always express (e.g., value-dependent gaps).
     */

@@ -103,6 +103,37 @@ class DedupSpec extends SparkSpec {
     assert(loopOnly.values.exists(_ != 0L))
   }
 
+  test("clusters: no edge checkpoint outlives the call on any return path") {
+    val sc = spark.sparkContext
+    // returns the persistent RDDs the call left behind, as row counts
+    def leftBehind(labels: => org.apache.spark.sql.DataFrame): Seq[Long] = {
+      val before = sc.getPersistentRDDs.keySet
+      labels.collect()
+      sc.getPersistentRDDs.keySet.diff(before).toSeq
+        .map(id => sc.getPersistentRDDs(id).count())
+    }
+    // 3 pairs -> 6 symmetrized edges over 5 nodes
+    val small = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    // driver finish: labels are a local relation, nothing stays pinned
+    assert(leftBehind(Dedup.clusters(small)) == Nil)
+    // loop exit: only the returned labels' own checkpoint (5 rows)
+    assert(leftBehind(Dedup.clusters(small, driverFinishEdges = 0L)) == Seq(5L))
+    // mid-iteration handoff (the star-chain fixture above: 262 edges
+    // over 132 nodes): only the handed-off labels' checkpoint
+    val stars = for {
+      k <- 0L until 12L; j <- 1L to 10L
+    } yield (k * 100, k * 100 + j)
+    val chain = (0L until 11L).map(k => (k * 100, (k + 1) * 100))
+    val starChain = (stars ++ chain).toDF("id_a", "id_b")
+    assert(leftBehind(Dedup.clusters(starChain, maxIters = 2,
+      driverFinishEdges = 60L)) == Seq(132L))
+    // a caller's lazy cache that the edge checkpoint job happens to
+    // build first is the caller's: it stays pinned
+    val cachedPairs = small.select(col("id_a"), col("id_b")).cache()
+    try assert(leftBehind(Dedup.clusters(cachedPairs)).size == 1)
+    finally cachedPairs.unpersist()
+  }
+
   test("clusters: fractional ids use the exact convergence probe, not the rounded sum") {
     // sub-integer id gaps: Decimal(38,0) rounding could alias a label
     // change into an unchanged sum — the chain must still fully converge

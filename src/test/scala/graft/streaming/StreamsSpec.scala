@@ -121,6 +121,30 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("event-time timeout drops rows at or before the initial watermark (epoch 0)") {
+    implicit val sq = spark.sqlContext
+    val input = MemoryStream[Event]
+    val sessions = Streams.sessionize(
+      input.toDS().withWatermark("ts", "0 seconds"),
+      gapMs = 30 * 60 * 1000L,
+      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)
+    val q = sessions.writeStream.outputMode("append")
+      .format("memory").queryName("sessions_epoch").start()
+    try {
+      // user 1's row is stamped at the epoch, the first batch's
+      // watermark: it counts as late and never reaches the state
+      input.addData(
+        Event(1, new Timestamp(0L), 1, "click", 2.0, "{}"),
+        ev(2, "2024-01-01 10:00:00", 2, v = 3.0))
+      q.processAllAvailable()
+      // advance the watermark far past both rows' gap
+      input.addData(ev(3, "2024-01-01 13:00:00", 3, v = 1.0))
+      q.processAllAvailable()
+      val got = spark.table("sessions_epoch").as[Session].collect()
+      assert(got.map(_.user_id).toSeq == Seq(2L))
+    } finally q.stop()
+  }
+
   test("session_window runs in append-mode STREAMING with a watermark") {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[Event]
